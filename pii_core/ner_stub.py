@@ -83,6 +83,26 @@ _RULE_NEEDLES: dict[int, tuple[str, ...]] = {
     3: ("/",),
 }
 
+# ``str.lower()`` alone is not IGNORECASE-sound: sre also treats 'ſ'
+# (U+017F) as 's', and both 'ı' (U+0131) and 'İ' (U+0130) as 'i', while
+# ``.lower()`` keeps 'ſ'/'ı' and expands 'İ' to 'i' + U+0307. These are the
+# only codepoints that sre equates with a needle letter but that ``.lower()``
+# does not map onto it (tests/test_ner_stub_precheck.py re-derives the set
+# from ``re`` over every codepoint). Dropping U+0307 can only add needle
+# hits, which merely run the regex.
+_NEEDLE_FOLDS = (("\u017f", "s"), ("\u0131", "i"), ("\u0307", ""))
+
+
+def _needle_fold(text: str) -> str:
+    """Case-fold ``text`` so that every IGNORECASE match of a needled rule
+    spells its needle in the result."""
+    low = text.lower()
+    if not low.isascii():  # O(1) flag check; the folds are all non-ASCII
+        for ch, to in _NEEDLE_FOLDS:
+            if ch in low:
+                low = low.replace(ch, to)
+    return low
+
 
 def _tok_jitter(text: str, a: int, b: int) -> float:
     """Deterministic per-token logit jitter in [0, 0.5) from the token bytes —
@@ -103,7 +123,7 @@ def stub_emissions(chunk_text: str, offsets: list[tuple[int, int]]) -> np.ndarra
         needles = _RULE_NEEDLES.get(ri)
         if needles is not None:
             if low is None:
-                low = chunk_text.lower()  # one C pass, shared across rules
+                low = _needle_fold(chunk_text)  # shared across rules
             if not any(n in low for n in needles):
                 continue  # no needle -> the regex provably cannot match
         for m in rx.finditer(chunk_text):

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pii_core.pipeline import ExtractConfig, extract_page_batch
+from pii_spark import zipcache
 from pii_spark.schemas import RESULTS_SCHEMA
 
 RESULTS_WITH_PID = T.StructType(
@@ -62,6 +63,11 @@ def _extract_batches(cfg: ExtractConfig, passthrough: tuple[str, ...] = ()):
     through the UDF without re-joining."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # Once per worker process, idempotent: on Python 3.11/3.12 every
+        # task start re-reads pyspark.zip's central directory once per
+        # zipimporter; the stat-gated refresh re-reads an archive only when
+        # it changed on disk. Reused workers keep it for all later tasks.
+        zipcache.install()
         # --- load-once-per-partition (the "model load" slot): StubEmitter +
         # WordTokenizer by default; a real TransformerEmitter + HF fast
         # tokenizer when cfg.model_path is set (optional torch dep) ---
@@ -175,34 +181,37 @@ def extract_pages(
 
 
 def lineage_from_results(results: DataFrame, run_id: str) -> DataFrame:
-    """Per-partition lineage counters (north rule): docs, bytes, spans by
-    type, keyed by (run_id, partition_id). Pass the COMMITTED results (read
-    back from storage, as resume.run_incremental does) so the counters
-    describe exactly what landed and extraction never re-runs."""
-    per_type = (
-        results.select("partition_id", F.explode_outer("spans").alias("s"))
-        .groupBy("partition_id", F.col("s.type").alias("type"))
-        .agg(F.count("*").alias("n"))
-        .where(F.col("type").isNotNull())
-        .groupBy("partition_id")
-        .agg(F.map_from_entries(
-            F.collect_list(F.struct("type", "n"))).alias("spans_by_type"))
+    """Per-partition lineage counters (north rule): docs, bytes, quarantined
+    docs (``errors``) and spans by type, keyed by (run_id, partition_id).
+    Pass the COMMITTED results (read back from storage, as
+    resume.run_incremental does) so the counters describe exactly what
+    landed and extraction never re-runs.
+
+    One scan: each doc explodes to one row per span, carrying the span's
+    type (one null-type row if it has no spans); per-doc counters count only
+    the doc's first row (``pos`` 0 or null), so each doc is counted once
+    across the (partition_id, type) groups before the per-partition
+    rollup."""
+    rows = results.select(
+        "partition_id", "doc_bytes", "error",
+        F.posexplode_outer("spans.type").alias("pos", "type"))
+    first = F.coalesce(F.col("pos") == 0, F.lit(True))
+    per_type = rows.groupBy("partition_id", "type").agg(
+        F.count(F.when(first, 1)).alias("docs"),
+        F.sum(F.when(first, F.col("doc_bytes"))).alias("bytes"),
+        F.count(F.when(first, F.col("error"))).alias("errors"),
+        F.count("pos").alias("n"),
     )
-    base = results.groupBy("partition_id").agg(
-        F.count("*").alias("docs"), F.sum("doc_bytes").alias("bytes"))
-    return (
-        base.join(per_type, "partition_id", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "docs",
-            "bytes",
-            F.coalesce(
-                "spans_by_type",
-                F.map_from_arrays(F.array(), F.array()).cast("map<string,bigint>"),
-            ).alias("spans_by_type"),
-        )
-    )
+    return per_type.groupBy("partition_id").agg(
+        F.sum("docs").alias("docs"),
+        F.sum("bytes").alias("bytes"),
+        F.sum("errors").alias("errors"),
+        # collect_list skips the null the no-span group yields
+        F.map_from_entries(F.collect_list(F.when(
+            F.col("type").isNotNull(), F.struct("type", "n"))))
+        .alias("spans_by_type"),
+    ).select(F.lit(run_id).alias("run_id"), "partition_id", "docs", "bytes",
+             "errors", "spans_by_type")
 
 
 def validate_pages(pages: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -8,9 +8,9 @@ plain parquet because no Iceberg runtime jar ships in this container):
 * on resume, read the table AS OF the last committed snapshot, take its
   ``url`` set, and LEFT ANTI JOIN the input against it — only unprocessed
   pages flow into the extraction pass.
-* lineage rows (run_id, partition_id, docs, bytes, spans_by_type) append to a
-  side table in the same transaction scope, so a run is replayable and
-  auditable partition-by-partition.
+* lineage rows (run_id, partition_id, docs, bytes, errors, spans_by_type)
+  append to a side table in the same transaction scope, so a run is
+  replayable and auditable partition-by-partition.
 
 The parquet emulation reproduces the atomicity with a PER-RUN COMMIT MARKER
 (the sandbox stand-in for an Iceberg snapshot):
@@ -21,8 +21,11 @@ The parquet emulation reproduces the atomicity with a PER-RUN COMMIT MARKER
    the filesystem, not by a read-then-act probe).
 2. results append under ``run_id=<id>/`` hive partitions (one extraction
    pass — the write is the only action), then lineage derives from the
-   COMMITTED files and appends.
-3. ``<run_id>.committed`` lands last via write-to-temp + atomic rename.
+   COMMITTED files in one scan and appends; the same job yields the
+   run's docs and quarantined-docs counts for the circuit breaker.
+3. the circuit breaker checks the quarantine fraction; a refused run stops
+   here, unmarked.
+4. ``<run_id>.committed`` lands last via write-to-temp + atomic rename.
    The marker IS the commit: every reader (``committed_urls``,
    ``lineage_summary``, the next increment's anti-join) filters to marked
    runs, so a crash at ANY earlier point leaves the run invisible — no
@@ -47,7 +50,7 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pii_core.pipeline import ExtractConfig
@@ -77,6 +80,8 @@ def _lineage_schema():
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("docs", T.LongType(), False),
         T.StructField("bytes", T.LongType(), True),
+        # nullable: lineage written before this column existed reads null
+        T.StructField("errors", T.LongType(), True),
         T.StructField("spans_by_type",
                       T.MapType(T.StringType(), T.LongType()), True),
         T.StructField("run_id", T.StringType(), False),
@@ -183,8 +188,8 @@ def run_incremental(
     max_error_rate: float | None = 0.5,
 ) -> dict:
     """One resumable increment: anti-join committed urls, extract the
-    remainder, commit results + lineage, then write the commit marker.
-    Returns counters for the run.
+    remainder, commit results + lineage, check the circuit breaker, then
+    write the commit marker. Returns counters for the run.
 
     Commit protocol (atomic at the marker, never double-counts):
     1. Reserve the run_id (O_EXCL — concurrent duplicates lose the race).
@@ -193,8 +198,11 @@ def run_incremental(
        persist() needed and no re-extraction under cache eviction.
     3. Lineage derives from the COMMITTED parquet, partition-pruned to this
        run_id, so a lineage row can never describe a document that failed
-       to land.
-    4. The commit marker lands LAST (temp + atomic rename). A crash before
+       to land. It is the only Spark job after the results write: an
+       ``Observation`` on the lineage write sums the rows' ``docs`` and
+       ``errors``, which are the returned counts and the breaker's input.
+    4. The circuit breaker (below) refuses or passes the run.
+    5. The commit marker lands LAST (temp + atomic rename). A crash before
        it leaves the run unmarked: readers and the next increment's
        anti-join ignore it completely — its urls re-extract under the next
        run_id, its lineage rows never surface in ``lineage_summary``, and
@@ -210,8 +218,9 @@ def run_incremental(
     up as a quarantine storm — and committing such a run would mark every
     url "done" with garbage results. When the fraction of error rows
     exceeds the threshold, the marker is NOT written and this raises: the
-    landed results stay in the normal crashed-run state (invisible to
-    readers; ``adopt_crashed_runs`` can salvage after inspection,
+    landed results and lineage stay in the crashed-run state that a crash
+    between the lineage write and the marker leaves (invisible to readers;
+    ``adopt_crashed_runs`` can salvage after inspection,
     ``vacuum_uncommitted`` discards, the urls re-extract under the next
     id). The breaker is ON BY DEFAULT at 0.5 — per-page quarantine plus an
     opt-in breaker would let an unconfigured job commit a 100%-garbage run
@@ -245,16 +254,22 @@ def run_incremental(
         results.withColumn("run_id", F.lit(run_id))
         .write.mode("append").partitionBy("run_id").parquet(results_dir)
     )
-    if not _exists(results_dir):  # first run over an empty input
+    if not any(map(_exists, _run_partition_dirs(results_dir, run_id))):
+        # nothing landed (empty input, or every url already committed)
         _write_marker(results_dir, run_id, 0)
         return {"run_id": run_id, "docs": 0, "errors": 0}
     committed = spark.read.schema(_committed_schema()).parquet(
         results_dir).where(F.col("run_id") == run_id)
-    counts = committed.agg(
-        F.count("*").alias("n"),
-        F.count("error").alias("errs"),  # count() skips nulls
-    ).first()
-    n, errs = int(counts["n"]), int(counts["errs"])
+    # The breaker's counts ride on the lineage write: the observed sums sit
+    # in that job's result stage, where Spark applies each task's metrics
+    # once per partition, so they are exact counts of the committed files.
+    counts = Observation()
+    _append_lineage(
+        lineage_from_results(committed, run_id).observe(
+            counts, F.sum("docs").alias("n"), F.sum("errors").alias("errs")),
+        lineage_dir)
+    got = counts.get
+    n, errs = int(got["n"] or 0), int(got["errs"] or 0)
     if max_error_rate is not None and n and errs > max_error_rate * n:
         raise RuntimeError(
             f"run {run_id!r}: {errs}/{n} pages quarantined "
@@ -263,9 +278,6 @@ def run_incremental(
             "an unmarked (crashed-state) run: inspect the error column, "
             "then adopt_crashed_runs to salvage or vacuum_uncommitted to "
             "discard")
-    if n:
-        lineage = lineage_from_results(committed, run_id)
-        _append_lineage(lineage, lineage_dir)
     _write_marker(results_dir, run_id, n)
     return {"run_id": run_id, "docs": n, "errors": errs}
 
@@ -475,6 +487,7 @@ def _lineage_summary_schema():
         T.StructField("run_id", T.StringType(), False),
         T.StructField("docs", T.LongType(), True),
         T.StructField("bytes", T.LongType(), True),
+        T.StructField("errors", T.LongType(), True),
         T.StructField("spans_by_type",
                       T.MapType(T.StringType(), T.LongType()), True),
     ])
@@ -483,7 +496,9 @@ def _lineage_summary_schema():
 def lineage_summary(
     spark: SparkSession, lineage_dir: str, results_dir: str,
 ) -> DataFrame:
-    """Roll lineage up per run: docs, bytes, spans by type (map-merge).
+    """Roll lineage up per run: docs, bytes, quarantined docs (``errors``;
+    null for runs whose lineage predates that column), spans by type
+    (map-merge).
     ``results_dir`` is REQUIRED: only MARKED runs surface, so lineage rows
     from a run that crashed before its commit marker are invisible, exactly
     like its results. (An optional-filter variant would silently resurface
@@ -509,7 +524,8 @@ def lineage_summary(
             F.collect_list(F.struct("type", "n"))).alias("spans_by_type"))
     )
     totals = lin.groupBy("run_id").agg(
-        F.sum("docs").alias("docs"), F.sum("bytes").alias("bytes"))
+        F.sum("docs").alias("docs"), F.sum("bytes").alias("bytes"),
+        F.sum("errors").alias("errors"))
     return totals.join(per_type, "run_id", "left")
 
 
