@@ -1,24 +1,37 @@
-"""Per-document extraction pipeline (the single source of truth).
+"""The extraction pipeline: one staged path for every entry point.
 
 Chains the full reference inference path (``infer_pii.py:137-313``) plus the
-north-rule stages:
+north-rule stages as four generator stages over a per-page ``_Doc`` record:
 
-    html -> main-content text      [NORTH, html_extract.py]
-    text -> chunks                 (chunking.py; reference chunking.py:144-301)
-    chunk -> NER emissions         (pluggable emitter; reference infer_pii.py:180-201)
-    emissions -> mean-logit agg    keyed by global char offsets
-                                   (reference infer_pii.py:209-235,277-310)
-    -> BIO Viterbi decode          (reference decoding.py:124-187)
+    1. prep       payload -> text            [NORTH, html_extract/pdf_extract]
+                  text -> chunks + offsets   (chunking.py; reference
+                                              chunking.py:144-301)
+    2. emit       chunk -> NER emissions     (pluggable emitter; reference
+                                              infer_pii.py:180-201), in
+                                              cross-document forward groups
+    3. aggregate  mean-logit matrix keyed by global char offsets
+                                             (reference infer_pii.py:209-235,
+                                              277-310)
+    4. viterbi    BIO Viterbi decode, cross-document packed batches
+                                             (reference decoding.py:124-187)
+
+and finishes each document with
+
     -> scored spans -> filter      (reference spans.py:138-269)
     + regex detector spans         [NORTH, detectors.py]
     -> merge same-type + resolve cross-type (reference spans.py:272-324)
     -> should_be_public = not any(span.type in PII_TYPES)
                                    (reference infer_pii.py:553-569,674)
 
+``extract_page_batch`` runs the stages over a batch of pages;
+``extract_page`` is a batch of one, and ``extract_document`` runs them on
+text it is given. ``ExtractConfig.make_emitter_and_tokenizer`` is the only
+place that resolves the emitter/tokenizer pair.
+
 Determinism contract: for a fixed config the output is a pure function of the
 input bytes — fp32 sums accumulate in chunk order, which is fixed per document
 and never split across Spark partitions, so results are bit-identical at any
-partition count / cluster size.
+partition count / cluster size and at any batch composition.
 
 Defaults mirror the reference CLI (infer_pii.py:359-438): max_length=512,
 stride=64, boundary_backoff=32, decode=bio_viterbi, aggregate=mean_logits,
@@ -30,7 +43,8 @@ from __future__ import annotations
 
 from collections import deque
 from dataclasses import dataclass, field
-from typing import Callable
+from itertools import chain, islice
+from typing import Callable, Iterator
 
 import numpy as np
 
@@ -71,8 +85,9 @@ class ExtractConfig:
     # fail-closed); True = chunker cuts such runs at exact token boundaries
     hard_split: bool = False
     # Optional real-model swap-in (requires torch + transformers): a HF
-    # token-classification checkpoint path/name. When set, make_emitter()
-    # loads pii_core.ner_transformer.TransformerEmitter and the matching
+    # token-classification checkpoint path/name. When set (and use_ner is
+    # on), make_emitter_and_tokenizer() loads
+    # pii_core.ner_transformer.TransformerEmitter and the matching
     # fast-tokenizer adapter; when None (sandbox default) the hermetic
     # StubEmitter + WordTokenizer path runs, byte-identical as before.
     model_path: str | None = None
@@ -140,12 +155,27 @@ class ExtractConfig:
     def make_tokenizer(self) -> WordTokenizer:
         return WordTokenizer(piece_len=self.tokenizer_piece_len)
 
-    def make_emitter_and_tokenizer(self):
-        """The per-executor "model load" slot: returns (emitter, tokenizer)
-        constructed once per partition iterator. Real checkpoint when
-        model_path is set (reference model load: infer_pii.py:445-470),
-        else the deterministic stub."""
-        if self.model_path is not None:
+    def make_emitter_and_tokenizer(self, emitter: Emitter | None = None,
+                                   tokenizer: WordTokenizer | None = None):
+        """The one place that resolves the (emitter, tokenizer) pair: every
+        extraction entry point calls it, and the Spark UDF calls it once per
+        partition iterator (the per-executor "model load" slot). Fills in
+        whichever part the caller did not pass.
+
+        The real checkpoint (reference model load: infer_pii.py:445-470)
+        loads only when ``use_ner`` is on AND ``model_path`` is set; a
+        detectors-only config never needs torch. Otherwise the deterministic
+        stub runs. Under a loading config, a tokenizer passed without an
+        emitter raises: it cannot pair with the checkpoint's own fast
+        tokenizer, and substituting the stub emitter would silently run
+        gazetteer spans against a model config (pages published as public
+        with unscanned names)."""
+        if emitter is None and self.use_ner and self.model_path is not None:
+            if tokenizer is not None:
+                raise ValueError(
+                    "model_path is set but only a tokenizer was passed; pass "
+                    "both emitter and tokenizer (or neither) for the real-"
+                    "model path")
             from pii_core.ner_transformer import (  # noqa: PLC0415
                 load_transformer_emitter,
             )
@@ -154,14 +184,15 @@ class ExtractConfig:
                 self.model_path, device=self.model_device,
                 max_length=self.max_length, pad_to_max=self.pad_to_max)
             return emitter, emitter.tokenizer_adapter
-        return StubEmitter(), self.make_tokenizer()
+        return (StubEmitter() if emitter is None else emitter,
+                self.make_tokenizer() if tokenizer is None else tokenizer)
 
 
 _PII_SET = frozenset(PII_TYPES)
 
 _SINGLE_CHUNK_FAST = True
 
-# Documents per cross-document batched-Viterbi call (extract_page_batch):
+# Documents per cross-document batched-Viterbi call (the Viterbi stage):
 # the packed DP's NumPy call overhead amortizes up to ~64 sequences, then
 # cache pressure erodes the win (measured on C=27).
 _DECODE_BATCH_DOCS = 64
@@ -175,38 +206,6 @@ _DECODE_WINDOW_DOCS = 8 * _DECODE_BATCH_DOCS
 # int32 backpointers (~500k rows * 27 labels ≈ 160 MB together) when the
 # window holds many book-length documents.
 _DECODE_CELL_BUDGET = 500_000
-
-
-def _chunk_emissions(pairs, emitter: Emitter, batch_size: int):
-    """Yield (chunk, offsets, (T,C) emissions) in chunk order from
-    (chunk, local_offsets) pairs (``build_chunks_with_offsets``),
-    micro-batching chunks through ``emitter.emit_batch`` when the emitter
-    provides it — the reference's batched forward pass (infer_pii.py:180-201,
-    chunks of one document in groups of --batch_size). Emissions per chunk
-    are identical either way; batching only changes how many chunks share a
-    forward call, so downstream fp32 accumulation order (chunk order) is
-    unchanged."""
-    emit_batch = getattr(emitter, "emit_batch", None)
-    if emit_batch is None:
-        for ch, offs in pairs:
-            if len(offs):
-                yield ch, offs, emitter(ch.text, offs)
-        return
-    step = max(1, int(batch_size))
-    for i in range(0, len(pairs), step):
-        keep = [(ch, offs) for ch, offs in pairs[i:i + step] if len(offs)]
-        if not keep:
-            continue
-        ems = list(emit_batch([ch.text for ch, _ in keep],
-                              [offs for _, offs in keep]))
-        if len(ems) != len(keep):
-            # zip would silently drop trailing chunks — their PII would
-            # never be decoded and the page could pass as public (fail-open)
-            raise RuntimeError(
-                f"emit_batch returned {len(ems)} emissions for "
-                f"{len(keep)} chunks")
-        yield from ((ch, offs, em)
-                    for (ch, offs), em in zip(keep, ems))
 
 
 def _label_ctx(emitter: Emitter):
@@ -369,49 +368,6 @@ def _mean_logit_matrix(items, n_chunks: int, trusted_offsets: bool = False):
     return keys, em_global
 
 
-def _decode_chunk_emissions(items, n_chunks: int, cfg: ExtractConfig,
-                            ctx, trusted_offsets: bool = False) -> list[Span]:
-    """One document's NER spans from its (chunk, offsets, emissions) stream.
-
-    ``items`` yields in CHUNK ORDER — the fp32 accumulation order — so the
-    result is byte-identical however the emissions were produced (per-chunk
-    calls, per-document micro-batches, or cross-document batches)."""
-    if cfg.aggregate == "mean_logits":
-        kg = _mean_logit_matrix(items, n_chunks, trusted_offsets)
-        if kg is None:
-            return []
-        return _decode_and_filter(kg[0], kg[1], cfg, ctx)
-
-    # aggregate == "none": per-chunk decode, shift to global offsets, merge later
-    # (reference infer_pii.py:237-275).
-    out: list[Span] = []
-    for ch, offs, em in items:
-        local = _decode_and_filter(offs, em, cfg, ctx)
-        out.extend(
-            Span(s.start + ch.char_start, s.end + ch.char_start, s.type, s.conf, s.n_tokens)
-            for s in local
-        )
-    return out
-
-
-def _ner_spans(
-    text: str, cfg: ExtractConfig, tokenizer: WordTokenizer, emitter: Emitter
-) -> list[Span]:
-    ctx = _label_ctx(emitter)
-    pairs = build_chunks_with_offsets(
-        text,
-        tokenizer,
-        max_length=cfg.max_length,
-        stride=cfg.stride,
-        boundary_backoff=cfg.boundary_backoff,
-        hard_split=cfg.hard_split,
-    )
-    items = _chunk_emissions(pairs, emitter, cfg.batch_size)
-    return _decode_chunk_emissions(
-        items, len(pairs), cfg, ctx,
-        trusted_offsets=bool(getattr(tokenizer, "slice_stable", False)))
-
-
 def _finalize_document(
     text: str, ner_spans: list[Span], cfg: ExtractConfig
 ) -> tuple[list[Span], bool]:
@@ -422,43 +378,6 @@ def _finalize_document(
     merged = merge_and_resolve(spans, resolve_overlaps=cfg.resolve_overlaps)
     public = not any(s.type in _PII_SET for s in merged)
     return merged, public
-
-
-def extract_document(
-    text: str,
-    cfg: ExtractConfig | None = None,
-    emitter: Emitter | None = None,
-    tokenizer: WordTokenizer | None = None,
-) -> tuple[list[Span], bool]:
-    """Extract (merged spans, should_be_public) from plain text."""
-    cfg = cfg or ExtractConfig()
-    if not isinstance(text, str) or not text:
-        return [], True
-    if emitter is None and tokenizer is None:
-        # same resolution as extract_page_batch: a configured model_path
-        # must load the REAL emitter here too — 'emitter or StubEmitter()'
-        # alone would silently run the stub against a checkpoint config
-        # (wrong spans, pages published as public)
-        if cfg.use_ner and cfg.model_path is not None:
-            emitter, tokenizer = cfg.make_emitter_and_tokenizer()
-        else:
-            tokenizer = cfg.make_tokenizer()
-    elif emitter is None:
-        if cfg.use_ner and cfg.model_path is not None:
-            # mirror extract_page_batch's guard: a caller-supplied
-            # tokenizer cannot pair with a checkpoint's own fast
-            # tokenizer — substituting the stub here would silently run
-            # gazetteer spans against a model config (pages published
-            # as public with unscanned names)
-            raise ValueError(
-                "model_path is set but only a tokenizer was passed; pass "
-                "both emitter and tokenizer (or neither) for the real-"
-                "model path")
-    elif tokenizer is None:
-        tokenizer = cfg.make_tokenizer()
-    ner = (_ner_spans(text, cfg, tokenizer, emitter or StubEmitter())
-           if cfg.use_ner else [])
-    return _finalize_document(text, ner, cfg)
 
 
 class DocTooLargeError(ValueError):
@@ -516,23 +435,6 @@ def _page_record(url: str, extracted: str, spans: list[Span],
     }
 
 
-def extract_page(
-    url: str,
-    html: bytes | None,
-    text: str | None,
-    cfg: ExtractConfig | None = None,
-    emitter: Emitter | None = None,
-    tokenizer: WordTokenizer | None = None,
-) -> dict:
-    """Full per-page record: payload (preferred) or pre-extracted text →
-    result. See ``_payload_to_text`` for the sniff and ``_page_record`` for
-    the output shape."""
-    cfg = cfg or ExtractConfig()
-    extracted = _payload_to_text(html, text, cfg.max_doc_bytes)
-    spans, public = extract_document(extracted, cfg, emitter, tokenizer)
-    return _page_record(url, extracted, spans, public)
-
-
 def _emit_group(group, emitter: Emitter, emit_batch):
     """Emissions for one cross-document chunk group. On a batched-forward
     failure, RETRY PER CHUNK so the error is attributed to the page that
@@ -570,15 +472,203 @@ def _emit_group(group, emitter: Emitter, emit_batch):
     return out
 
 
+@dataclass(slots=True, eq=False)
+class _Doc:
+    """One page's state as it moves through the four stages."""
+    url: str | None
+    text: str = ""
+    n_chunks: int = 0      # every chunk, token-less ones included
+    chunks: list = field(default_factory=list)   # (chunk, offsets), tokens>0
+    emitted: list = field(default_factory=list)  # (chunk, offsets, em | exc)
+    keys: object = None    # global offsets of ``matrix`` (awaiting Viterbi)
+    matrix: np.ndarray | None = None
+    ner: list[Span] = field(default_factory=list)
+    error: Exception | None = None
+
+
+def _prep(records, cfg: ExtractConfig, tokenizer,
+          max_doc_bytes: int | None) -> Iterator[_Doc]:
+    """Stage 1: payload -> text -> chunks, one document at a time."""
+    for url, html, text in records:
+        d = _Doc(url)
+        try:
+            d.text = _payload_to_text(html, text, max_doc_bytes)
+            if cfg.use_ner and d.text:
+                pairs = build_chunks_with_offsets(
+                    d.text, tokenizer,
+                    max_length=cfg.max_length, stride=cfg.stride,
+                    boundary_backoff=cfg.boundary_backoff,
+                    hard_split=cfg.hard_split,
+                )
+                d.n_chunks = len(pairs)
+                d.chunks = [(ch, offs) for ch, offs in pairs if len(offs)]
+        except ChunkingConfigError:
+            # a config that can never work for ANY page must abort the job
+            # (loudly, at the first task), not quarantine every page into a
+            # silently fail-closed corpus whose urls then all commit as done
+            raise
+        except Exception as e:  # noqa: BLE001 — per-page quarantine
+            d.error = e
+        yield d
+
+
+def _emit(docs: Iterator[_Doc], emitter: Emitter,
+          batch_size: int) -> Iterator[_Doc]:
+    """Stage 2: emissions for the cross-document chunk stream, cut into
+    consecutive ``batch_size`` groups (one ``_emit_group`` forward each)
+    wherever document boundaries fall. Yields each document in input order
+    as soon as every one of its chunks has its emissions, so only the docs
+    of one open group (plus any finished docs queued behind an open one)
+    are held."""
+    emit_batch = getattr(emitter, "emit_batch", None)
+    step = max(1, int(batch_size)) if emit_batch is not None else 1
+    waiting: deque[_Doc] = deque()
+    buf: list = []  # (doc, chunk, offsets) awaiting a forward group
+    for d in chain(docs, [None]):  # None: input exhausted, drain the tail
+        if d is not None:
+            waiting.append(d)
+            buf.extend((d, ch, offs) for ch, offs in d.chunks)
+        while len(buf) >= step or (d is None and buf):
+            group, buf = buf[:step], buf[step:]
+            for (g, ch, offs), em in zip(
+                    group, _emit_group(group, emitter, emit_batch)):
+                g.emitted.append((ch, offs, em))
+        while waiting and len(waiting[0].emitted) == len(waiting[0].chunks):
+            yield waiting.popleft()
+    # nonempty only on an accounting fault; the aggregate stage catches it
+    yield from waiting
+
+
+def _aggregate(docs: Iterator[_Doc], cfg: ExtractConfig, ctx,
+               trusted_offsets: bool) -> Iterator[_Doc]:
+    """Stage 3: a document's emissions -> its (keys, mean-logit matrix),
+    handed to the Viterbi stage. The non-default modes finish their NER
+    spans here instead: ``decode="argmax"`` decodes the matrix directly and
+    ``aggregate="none"`` decodes each chunk and shifts it to global offsets
+    (reference infer_pii.py:237-275). Chunks and emissions are released on
+    the way out, so a document past this stage holds only its matrix."""
+    for d in docs:
+        try:
+            if d.error is None and len(d.emitted) != len(d.chunks):
+                # every chunk goes through a forward group before the emit
+                # stage lets its doc go, so a short stream is an internal
+                # accounting bug — quarantine loudly, never decode a partial
+                # emission stream into a plausible-but-wrong record
+                d.error = RuntimeError(
+                    f"internal: {len(d.chunks) - len(d.emitted)} emissions "
+                    f"missing for {d.url!r}")
+            if d.error is None:
+                d.error = next((em for _, _, em in d.emitted
+                                if isinstance(em, Exception)), None)
+            if d.error is None and d.emitted:
+                if cfg.aggregate == "none":
+                    for ch, offs, em in d.emitted:
+                        d.ner.extend(
+                            Span(s.start + ch.char_start,
+                                 s.end + ch.char_start, s.type, s.conf,
+                                 s.n_tokens)
+                            for s in _decode_and_filter(offs, em, cfg, ctx))
+                else:
+                    kg = _mean_logit_matrix(d.emitted, d.n_chunks,
+                                            trusted_offsets)
+                    if kg is not None and cfg.decode == "argmax":
+                        d.ner = _decode_and_filter(kg[0], kg[1], cfg, ctx)
+                    elif kg is not None:
+                        d.keys, d.matrix = kg
+        except Exception as e:  # noqa: BLE001 — per-page quarantine
+            d.error = e
+        d.chunks, d.emitted = [], []
+        yield d
+
+
+def _viterbi_sub(sub: list[_Doc], cfg: ExtractConfig, ctx) -> None:
+    """Decode one packed sub-batch in place: ``ner`` on success, ``error``
+    on failure. A batch-level failure must not poison healthy neighbors:
+    it retries each document through the single-sequence decoder and
+    quarantines individually."""
+    labels_list, o_id = ctx[0], ctx[3]
+    ems = [d.matrix for d in sub]
+    try:
+        paths = viterbi_bio_batch(ems, labels_list, o_id)
+        if len(paths) != len(ems):
+            # zip would silently truncate, leaving documents undecoded —
+            # same count-contract guard as the emit_batch paths
+            raise RuntimeError(
+                f"viterbi_bio_batch returned {len(paths)} paths for "
+                f"{len(ems)} sequences")
+    except Exception:  # noqa: BLE001 — isolate per page below
+        paths = []
+        for em in ems:
+            try:
+                paths.append(viterbi_bio(em, labels_list, o_id))
+            except Exception as e:  # noqa: BLE001
+                paths.append(e)
+    for d, path in zip(sub, paths):
+        try:
+            if isinstance(path, Exception):
+                raise path
+            d.ner = _decode_and_filter(d.keys, d.matrix, cfg, ctx, pred=path)
+        except Exception as e:  # noqa: BLE001 — per-page quarantine
+            d.error = e
+        d.keys = d.matrix = None
+
+
+def _viterbi(docs: Iterator[_Doc], cfg: ExtractConfig,
+             ctx) -> Iterator[_Doc]:
+    """Stage 4: cross-document batched BIO Viterbi. Reads
+    ``_DECODE_WINDOW_DOCS`` documents at a time, sorts those holding a
+    matrix longest-first (decode order is free; output stays in input
+    order) and decodes them through ``viterbi_bio_batch`` in packed
+    sub-batches of at most ``_DECODE_BATCH_DOCS`` documents and
+    ``_DECODE_CELL_BUDGET`` token rows — bit-identical to per-document
+    ``viterbi_bio``, with the DP's per-step NumPy cost amortized across the
+    sub-batch (~3x decode speedup)."""
+    while window := list(islice(docs, _DECODE_WINDOW_DOCS)):
+        todo = sorted((d for d in window if d.matrix is not None),
+                      key=lambda d: d.matrix.shape[0], reverse=True)
+        sub: list[_Doc] = []
+        cells = 0
+        for d in todo:
+            k = int(d.matrix.shape[0])
+            if sub and (len(sub) >= _DECODE_BATCH_DOCS
+                        or cells + k > _DECODE_CELL_BUDGET):
+                _viterbi_sub(sub, cfg, ctx)
+                sub, cells = [], 0
+            sub.append(d)
+            cells += k
+        if sub:
+            _viterbi_sub(sub, cfg, ctx)
+        yield from window
+
+
+def _stages(records, cfg: ExtractConfig, emitter: Emitter | None,
+            tokenizer: WordTokenizer | None,
+            max_doc_bytes: int | None) -> Iterator[_Doc]:
+    """The one extraction path: resolve the emitter/tokenizer pair (eagerly,
+    so a bad pair raises before any page is read), then chain the four
+    stages lazily over ``records`` of (url, html, text)."""
+    emitter, tokenizer = cfg.make_emitter_and_tokenizer(emitter, tokenizer)
+    ctx = _label_ctx(emitter)
+    # offsets below all come from build_chunks_with_offsets over THIS
+    # tokenizer: slice-stable scans are strictly-increasing/non-empty by
+    # construction, so the aggregation fast path may skip its validation
+    trusted = bool(getattr(tokenizer, "slice_stable", False))
+    docs = _prep(records, cfg, tokenizer, max_doc_bytes)
+    docs = _emit(docs, emitter, cfg.batch_size)
+    docs = _aggregate(docs, cfg, ctx, trusted)
+    return _viterbi(docs, cfg, ctx)
+
+
 def extract_page_batch(
     records,
     cfg: ExtractConfig | None = None,
     emitter: Emitter | None = None,
     tokenizer: WordTokenizer | None = None,
 ) -> list[dict | Exception]:
-    """Cross-DOCUMENT chunk batching: extract a batch of pages with chunks
-    from ALL documents sharing ``emitter.emit_batch`` forward passes in
-    groups of ``cfg.batch_size``, regardless of document boundaries.
+    """Extract a batch of pages through the four stages (module docstring),
+    with chunks from ALL documents sharing ``emitter.emit_batch`` forward
+    passes in groups of ``cfg.batch_size``, regardless of document
+    boundaries.
 
     This generalizes the reference's per-document ``--batch_size`` forward
     batching (infer_pii.py:180-201) across documents: web corpora are
@@ -586,226 +676,79 @@ def extract_page_batch(
     to batch-of-1 forwards and a real GPU emitter starves. Here 8
     single-chunk documents share one forward pass.
 
-    Streaming: documents are prepared (payload → text → chunks → offsets),
-    emitted, aggregated, and finalized in ONE interleaved pass — a forward
-    group fires as soon as ``batch_size`` chunks are pending; a document's
-    chunks collapse to its (keys, mean-logit matrix) the moment its last
-    chunk is through; label decode runs in cross-document groups (a
-    ``_DECODE_WINDOW_DOCS`` ready window, sorted longest-first, cut into
-    ``_DECODE_BATCH_DOCS`` packed sub-batches — bit-identical batched
-    Viterbi). Peak extra memory is O(batch_size × chunk +
-    _DECODE_WINDOW_DOCS documents' (keys, matrix, text) tuples) — the
-    WINDOW, not the sub-batch, is the buffering bound; the cell budget
-    caps only the packed float64 copy. Still far below O(Arrow batch):
-    an up-front phase split would buffer every chunk text and per-token
-    offset tuple for all ~1024 batched docs.
+    Streaming: the stages are generators, so a document flows through as
+    soon as its input is complete — a forward group fires as soon as
+    ``batch_size`` chunks are pending; a document's chunks collapse to its
+    (keys, mean-logit matrix) the moment its last chunk is through; the
+    Viterbi stage decodes one ``_DECODE_WINDOW_DOCS`` window at a time.
+    Peak extra memory is O(batch_size × chunk + _DECODE_WINDOW_DOCS
+    documents' (keys, matrix, text)) — the WINDOW, not the sub-batch, is
+    the buffering bound; the cell budget caps only the packed float64 copy.
+    Still far below O(Arrow batch): an up-front phase split would buffer
+    every chunk text and per-token offset tuple for all ~1024 batched docs.
 
     Byte-identity: group boundaries are consecutive ``batch_size`` slices
     of the global chunk stream (independent of where document boundaries
     fall), each document's chunks keep chunk order, emissions per chunk are
     independent of group composition (stub: pure per-chunk function;
-    transformer: fixed-width padding — see TransformerEmitter), and
-    per-document fp32 mean-logit accumulation consumes them in that same
-    order — so every returned record equals ``extract_page`` on the same
-    row (pytest-pinned parity).
+    transformer: fixed-width padding — see TransformerEmitter), per-document
+    fp32 mean-logit accumulation consumes them in that same order, and
+    batched Viterbi is bit-identical to the per-document decoder — so every
+    record equals the same page extracted alone (``extract_page``, a batch
+    of one) and the per-document oracle in the tests (pytest-pinned parity).
 
     ``records``: iterable of (url, html, text). Returns a list aligned with
     the input; each element is the page record dict, or the Exception that
     page raised (callers quarantine — the Spark UDF maps it to a
     fail-closed error row). A failing page never poisons its neighbors:
     prep errors, EMITTER errors (isolated per chunk via ``_emit_group``),
-    and decode errors all quarantine only their own page.
+    and decode errors all quarantine only their own page. Only a
+    ``ChunkingConfigError`` (a config no page can pass) aborts the batch.
     """
     cfg = cfg or ExtractConfig()
-    if emitter is None and tokenizer is None:
-        emitter, tokenizer = cfg.make_emitter_and_tokenizer()
-    elif emitter is None:
-        if cfg.model_path is not None:
-            # a caller-supplied tokenizer cannot pair with a checkpoint's
-            # own fast tokenizer — substituting the stub here would
-            # silently run gazetteer spans against a model config
-            raise ValueError(
-                "model_path is set but only a tokenizer was passed; pass "
-                "both emitter and tokenizer (or neither) for the real-"
-                "model path")
-        emitter = StubEmitter()
-    elif tokenizer is None:
-        tokenizer = cfg.make_tokenizer()
-    ctx = _label_ctx(emitter)
-    emit_batch = getattr(emitter, "emit_batch", None)
-    step = max(1, int(cfg.batch_size)) if emit_batch is not None else 1
-    # Cross-document BATCHED Viterbi (the default decode+aggregate): docs
-    # whose emissions are complete queue their (keys, mean-logit matrix)
-    # and decode together in groups of _DECODE_BATCH_DOCS through
-    # viterbi_bio_batch — bit-identical paths, but the DP's per-step NumPy
-    # cost amortizes across the group (~3x decode speedup; decoding is the
-    # single-core hot spot when emissions are cheap). Output order is
-    # preserved: ready is FIFO in input order and flushes in order.
-    batched_viterbi = (cfg.decode == "bio_viterbi"
-                       and cfg.aggregate == "mean_logits")
-    labels_list, o_id = ctx[0], ctx[3]
-    # offsets below all come from build_chunks_with_offsets over THIS
-    # tokenizer: slice-stable scans are strictly-increasing/non-empty by
-    # construction, so the aggregation fast path may skip its validation
-    trusted_offs = bool(getattr(tokenizer, "slice_stable", False))
-
     out: list[dict | Exception] = []
-    # Docs whose emissions are still outstanding, in input order:
-    # [url, extracted, n_chunks, err, n_left, items]
-    pending: deque[list] = deque()
-    buf: list = []  # (doc_state, chunk, offsets) awaiting a forward group
-    # Phase-A results awaiting the batched decode, in input order:
-    # ("done", record_or_exception) | ("decode", url, extracted, keys, em)
-    ready: deque[tuple] = deque()
-
-    def finalize_record(url, extracted, ner) -> dict | Exception:
-        try:
-            spans, public = _finalize_document(extracted, ner, cfg)
-            return _page_record(url, extracted, spans, public)
-        except Exception as e:  # noqa: BLE001 — per-page quarantine
-            return e
-
-    def phase_a(d) -> tuple:
-        """Everything before the label decode: error routing + mean-logit
-        aggregation. Returns a ready-queue entry."""
-        url, extracted, n_chunks, err, _n_left, items = d
-        if err is None:
-            err = next((em for _, _, em in items
-                        if isinstance(em, Exception)), None)
-        if err is not None:
-            return ("done", err)
-        if not n_chunks:
-            return ("done", finalize_record(url, extracted, []))
-        if not batched_viterbi:
+    for d in _stages(records, cfg, emitter, tokenizer, cfg.max_doc_bytes):
+        if d.error is None:
             try:
-                ner = _decode_chunk_emissions(iter(items), n_chunks, cfg,
-                                              ctx, trusted_offs)
+                spans, public = _finalize_document(d.text, d.ner, cfg)
+                out.append(_page_record(d.url, d.text, spans, public))
+                continue
             except Exception as e:  # noqa: BLE001 — per-page quarantine
-                return ("done", e)
-            return ("done", finalize_record(url, extracted, ner))
-        try:
-            kg = _mean_logit_matrix(items, n_chunks, trusted_offs)
-        except Exception as e:  # noqa: BLE001 — per-page quarantine
-            return ("done", e)
-        if kg is None:
-            return ("done", finalize_record(url, extracted, []))
-        return ("decode", url, extracted, kg[0], kg[1])
-
-    def flush_ready(drain: bool) -> None:
-        while len(ready) >= _DECODE_WINDOW_DOCS or (drain and ready):
-            take = [ready.popleft()
-                    for _ in range(min(_DECODE_WINDOW_DOCS, len(ready)))]
-            dec = [r for r in take if r[0] == "decode"]
-            preds: dict[int, list[int] | Exception] = {}
-
-            def run_sub(sub: list[int]) -> None:
-                ems = [dec[j][4] for j in sub]
-                try:
-                    got = viterbi_bio_batch(ems, labels_list, o_id)
-                    if len(got) != len(ems):
-                        # zip would silently truncate and the preds lookup
-                        # below would then abort the whole task — same
-                        # count-contract guard as the emit_batch paths
-                        raise RuntimeError(
-                            f"viterbi_bio_batch returned {len(got)} paths "
-                            f"for {len(ems)} sequences")
-                except Exception:  # noqa: BLE001 — isolate per page below
-                    # a batch-level failure must not poison healthy
-                    # neighbors: retry each document through the
-                    # single-sequence decoder and quarantine individually
-                    got = []
-                    for em in ems:
-                        try:
-                            got.append(viterbi_bio(em, labels_list, o_id))
-                        except Exception as e:  # noqa: BLE001
-                            got.append(e)
-                for j, p in zip(sub, got):
-                    preds[j] = p
-
-            if dec:
-                # longest-first so each packed sub-batch holds documents of
-                # similar length (decode order is free; output stays FIFO)
-                order = sorted(range(len(dec)), reverse=True,
-                               key=lambda j: dec[j][4].shape[0])
-                sub: list[int] = []
-                cells = 0
-                for j in order:
-                    k = int(dec[j][4].shape[0])
-                    if sub and (len(sub) >= _DECODE_BATCH_DOCS
-                                or cells + k > _DECODE_CELL_BUDGET):
-                        run_sub(sub)
-                        sub, cells = [], 0
-                    sub.append(j)
-                    cells += k
-                if sub:
-                    run_sub(sub)
-            di = 0
-            for r in take:
-                if r[0] == "done":
-                    out.append(r[1])
-                    continue
-                _, url, extracted, keys, em = r
-                pred = preds[di]
-                di += 1
-                if isinstance(pred, Exception):
-                    out.append(pred)
-                    continue
-                try:
-                    ner = _decode_and_filter(keys, em, cfg, ctx, pred=pred)
-                except Exception as e:  # noqa: BLE001 — per-page quarantine
-                    out.append(e)
-                    continue
-                out.append(finalize_record(url, extracted, ner))
-
-    def pump(drain: bool) -> None:
-        while len(buf) >= step or (drain and buf):
-            group, del_n = buf[:step], min(step, len(buf))
-            del buf[:del_n]
-            for (d, ch, offs), em in zip(
-                    group, _emit_group(group, emitter, emit_batch)):
-                d[5].append((ch, offs, em))
-                d[4] -= 1
-            while pending and pending[0][4] == 0:
-                ready.append(phase_a(pending.popleft()))
-            flush_ready(drain=False)
-
-    for url, html, text in records:
-        d = [url, None, 0, None, 0, []]
-        try:
-            d[1] = extracted = _payload_to_text(html, text,
-                                                cfg.max_doc_bytes)
-            if cfg.use_ner and extracted:
-                pairs = build_chunks_with_offsets(
-                    extracted, tokenizer,
-                    max_length=cfg.max_length, stride=cfg.stride,
-                    boundary_backoff=cfg.boundary_backoff,
-                    hard_split=cfg.hard_split,
-                )
-                d[2] = len(pairs)
-                with_offs = [(ch, offs) for ch, offs in pairs
-                             if len(offs)]
-                d[4] = len(with_offs)
-                buf.extend((d, ch, offs) for ch, offs in with_offs)
-        except ChunkingConfigError:
-            # a config that can never work for ANY page must abort the job
-            # (loudly, at the first task), not quarantine every page into a
-            # silently fail-closed corpus whose urls then all commit as done
-            raise
-        except Exception as e:  # noqa: BLE001 — per-page quarantine
-            # nothing of this doc is in buf: chunks buffer only via the
-            # buf.extend that is the try block's last statement
-            d[3], d[4] = e, 0
-        pending.append(d)
-        pump(drain=False)
-    pump(drain=True)
-    while pending:  # zero-chunk docs trailing the last group
-        d = pending.popleft()
-        if d[4] != 0 and d[3] is None:
-            # every buffered chunk was pumped, so a nonzero n_left means an
-            # internal accounting bug — quarantine loudly, never decode a
-            # partial emission stream into a plausible-but-wrong record
-            d[3] = RuntimeError(
-                f"internal: {d[4]} emissions missing for {d[0]!r}")
-        ready.append(phase_a(d))
-    flush_ready(drain=True)
+                d.error = e
+        out.append(d.error)
     return out
+
+
+def extract_page(
+    url: str,
+    html: bytes | None,
+    text: str | None,
+    cfg: ExtractConfig | None = None,
+    emitter: Emitter | None = None,
+    tokenizer: WordTokenizer | None = None,
+) -> dict:
+    """Full per-page record: ``extract_page_batch`` over this one page,
+    re-raising the exception the page quarantined with. See
+    ``_payload_to_text`` for the payload sniff and ``_page_record`` for the
+    output shape."""
+    (rec,) = extract_page_batch([(url, html, text)], cfg, emitter, tokenizer)
+    if isinstance(rec, Exception):
+        raise rec
+    return rec
+
+
+def extract_document(
+    text: str,
+    cfg: ExtractConfig | None = None,
+    emitter: Emitter | None = None,
+    tokenizer: WordTokenizer | None = None,
+) -> tuple[list[Span], bool]:
+    """(merged spans, should_be_public) for plain text: the same stages on
+    the text as given — no payload sniff, no ``max_doc_bytes`` cap."""
+    cfg = cfg or ExtractConfig()
+    if not isinstance(text, str) or not text:
+        return [], True
+    (d,) = _stages([(None, None, text)], cfg, emitter, tokenizer, None)
+    if d.error is not None:
+        raise d.error
+    return _finalize_document(text, d.ner, cfg)

@@ -2,10 +2,17 @@
 decision logic, detector/NER union."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from oracles.pipeline import extract_page_oracle
 from pii_core.labels import PII_TYPES
-from pii_core.pipeline import ExtractConfig, extract_document, extract_page
+from pii_core.pipeline import (
+    ExtractConfig,
+    extract_document,
+    extract_page,
+    extract_page_batch,
+)
 
 
 def test_empty_doc_is_public():
@@ -143,10 +150,11 @@ def test_single_chunk_fast_path_equivalent():
 
 def test_extract_page_batch_parity_mixed_corpus():
     """Cross-document batching (VERDICT r2 #2) must be byte-identical to the
-    per-page path on a mixed corpus: short single-chunk pages, multi-chunk
-    pages (overlap accumulation spanning forward-group boundaries), PDFs,
-    empty payloads, text-only rows — and a failing page must map to its
-    Exception without poisoning neighbors."""
+    per-document oracle AND to each page extracted alone (a batch of N
+    pages equals N batches of one) on a mixed corpus: short single-chunk
+    pages, multi-chunk pages (overlap accumulation spanning forward-group
+    boundaries), PDFs, empty payloads, text-only rows — and a failing page
+    must map to its Exception without poisoning neighbors."""
     from pii_core.pipeline import extract_page, extract_page_batch
     from pii_spark.synth import gen_pages
 
@@ -167,7 +175,10 @@ def test_extract_page_batch_parity_mixed_corpus():
     for (url, html, text), rec in zip(pages, got):
         if url == "fails":
             assert isinstance(rec, RuntimeError)
+            with pytest.raises(RuntimeError):
+                extract_page_oracle(url, html, text, cfg)
             continue
+        assert rec == extract_page_oracle(url, html, text, cfg), url
         assert rec == extract_page(url, html, text, cfg), url
 
 
@@ -212,8 +223,9 @@ def test_batch_vs_per_page_parity_property(data):
     """Randomized twin of the fixed-corpus parity test: for ANY corpus of
     small documents (html / raw text / empty / None payloads, entity
     snippets at random positions), any batch_size, and a random chunk
-    geometry, extract_page_batch must equal per-page extract_page
-    elementwise — quarantined pages included (same exception type)."""
+    geometry, extract_page_batch must equal the per-document oracle and
+    per-page extract_page elementwise — quarantined pages included (same
+    exception type)."""
     from pii_core.pipeline import extract_page, extract_page_batch
 
     st_doc = st.lists(st.sampled_from(_WORDS), min_size=0, max_size=25) \
@@ -221,9 +233,9 @@ def test_batch_vs_per_page_parity_property(data):
     docs = data.draw(st.lists(st_doc, min_size=1, max_size=12))
     max_length = data.draw(st.integers(16, 64))
     stride = data.draw(st.integers(0, min(15, max_length - 3)))
-    # decode/aggregate drawn too: the non-default combinations route
-    # through extract_page_batch's single-doc finalize branch (no batched
-    # Viterbi) and must stay byte-identical there as well
+    # decode/aggregate drawn too: the non-default combinations finish in
+    # the aggregate stage (no batched Viterbi) and must stay byte-identical
+    # there as well
     cfg = ExtractConfig(max_length=max_length, stride=stride,
                         batch_size=data.draw(st.integers(1, 7)),
                         decode=data.draw(st.sampled_from(
@@ -242,12 +254,13 @@ def test_batch_vs_per_page_parity_property(data):
     got = extract_page_batch(pages, cfg)
     assert len(got) == len(pages)
     for (url, html, text), rec in zip(pages, got):
-        try:
-            want = extract_page(url, html, text, cfg)
-        except Exception as e:  # noqa: BLE001 — parity includes failures
-            assert isinstance(rec, type(e)), url
-            continue
-        assert rec == want, url
+        for reference in (extract_page_oracle, extract_page):
+            try:
+                want = reference(url, html, text, cfg)
+            except Exception as e:  # noqa: BLE001 — parity includes failures
+                assert isinstance(rec, type(e)), url
+                continue
+            assert rec == want, url
 
 
 def test_short_emit_batch_never_silently_truncates():
@@ -300,7 +313,8 @@ def test_chunking_config_error_aborts_batch_instead_of_quarantining():
 
 
 def test_per_doc_path_rejects_short_emit_batch():
-    """The per-document path (extract_page -> _chunk_emissions) must fail
+    """The per-page entry point (extract_page -> the emit stage's
+    _emit_group, which retries a miscounted group per chunk) must fail
     loudly on an emitter count-contract violation, not zip-truncate: a
     silently dropped trailing chunk would leave its PII undecoded and the
     page could pass as public."""
@@ -472,3 +486,62 @@ def test_trusted_offsets_path_equivalent():
     # the key values/order (spans_from_bio asarray-normalizes either form)
     assert np.asarray(keys).tolist() == [[1, 3]]
     assert np.allclose(m, [[4.0, 5.0]])
+
+
+def test_detector_only_model_config_never_loads_checkpoint():
+    """A model_path with use_ner=False runs detectors only on EVERY entry
+    point: the batch path (and so every Spark task) must not try to load
+    the checkpoint — that needs torch, and the emitter would never run —
+    and its record must equal the per-page one."""
+    cfg = ExtractConfig(model_path="some/checkpoint", use_ner=False)
+    (rec,) = extract_page_batch([("u", None, "contato a@b.org")], cfg)
+    assert not isinstance(rec, Exception), rec
+    assert [(s["type"], s["value"]) for s in rec["spans"]] == [
+        ("CONTATO", "a@b.org")]
+    assert rec["should_be_public"] is False
+    assert rec == extract_page("u", None, "contato a@b.org", cfg)
+
+
+def test_resolver_fills_in_the_missing_part():
+    """make_emitter_and_tokenizer is the only resolver: it keeps what the
+    caller passed, fills in the rest, and refuses a tokenizer without an
+    emitter on every entry point when the config would load a model."""
+    from pii_core.ner_stub import StubEmitter
+    from pii_core.tokenizer import WordTokenizer
+
+    cfg = ExtractConfig(tokenizer_piece_len=5)
+    em, tok = StubEmitter(), WordTokenizer(piece_len=3)
+    assert cfg.make_emitter_and_tokenizer(em, tok) == (em, tok)
+    got_em, got_tok = cfg.make_emitter_and_tokenizer(em)
+    assert got_em is em and got_tok.piece_len == 5
+    got_em, got_tok = cfg.make_emitter_and_tokenizer(tokenizer=tok)
+    assert isinstance(got_em, StubEmitter) and got_tok is tok
+
+    model_cfg = ExtractConfig(model_path="some/checkpoint")
+    with pytest.raises(ValueError, match="only a tokenizer"):
+        model_cfg.make_emitter_and_tokenizer(tokenizer=tok)
+    with pytest.raises(ValueError, match="only a tokenizer"):
+        extract_page_batch([("u", None, "Maria da Silva")], model_cfg,
+                           tokenizer=tok)
+    # a caller-supplied emitter never triggers a load
+    assert model_cfg.make_emitter_and_tokenizer(em, tok) == (em, tok)
+
+
+def test_aggregate_stage_quarantines_partial_emission_stream():
+    """Fault check: a document that leaves the emit stage with fewer
+    emissions than chunks quarantines loudly in the aggregate stage —
+    a partial stream is never decoded into a plausible-but-wrong record."""
+    import pii_core.pipeline as pl
+    from pii_core.ner_stub import StubEmitter
+
+    cfg = ExtractConfig(max_length=32, stride=8)
+    emitter = StubEmitter()
+    (d,) = pl._prep([("u", None, "Solicito acesso ao processo. " * 20)],
+                    cfg, cfg.make_tokenizer(), None)
+    assert len(d.chunks) > 1
+    d.emitted = [(ch, offs, emitter(ch.text, offs))
+                 for ch, offs in d.chunks[:-1]]
+    (out,) = pl._aggregate(iter([d]), cfg, pl._label_ctx(emitter), True)
+    assert isinstance(out.error, RuntimeError)
+    assert "internal: 1 emissions missing for 'u'" in str(out.error)
+    assert out.matrix is None and out.ner == []
